@@ -12,7 +12,7 @@ Prints ONE JSON line:
    "unit": "sec", "queries": {name: sec}, "sf": <sf>, ...extras}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
      GEOKIT_BENCH_DOCS (default 20_000_000; light all-JVM stages run
      at GEOKIT_LIGHT_MULT x that, default 4 -> 80M),
      GEOKIT_BENCH_REPS (default 2, min-of-reps steady state),
@@ -55,10 +55,8 @@ from geokit_spark.session import get_spark  # noqa: E402
 from geokit_spark.sources import tiles as tilesrc  # noqa: E402
 
 # Stages measured for regression cover but reported OUTSIDE the
-# headline suite (full record `latency_baselines` key): their wall
-# time is driver-side setup latency (broadcast matrix build, sidecar
-# write), constant in parallelism — a headline/scaling row that can't
-# speed up with cores would misgrade the suite.
+# headline suite (full record `latency_baselines` key), so the
+# headline sum keeps the same stage set across rounds.
 _LATENCY_BASELINES = ("ann_topk",)
 
 
@@ -332,20 +330,18 @@ def bench_queries(spark, sf_dir: str, n_docs: int, cpus: int):
         n_sn,
     )
 
-    # ANN top-k over synthetic embeddings with the scale-aware plane
-    # count (suggest_n_planes keeps expected bucket size bounded) and
-    # the Arrow throughput path (one-pass matmul buckets + broadcast-
-    # matrix re-score; pytest-verified equal to the fold/oracle path)
+    # ANN top-k over synthetic array<double> embeddings with the
+    # scale-aware plane count (suggest_n_planes keeps expected bucket
+    # size bounded) through ann_topk_bucketed, the one Arrow ANN engine
+    # (pytest-verified equal in neighbor sets to the fold/oracle path)
     from geokit_spark.operators.similarity import (
-        ann_topk_arrow,
-        release_ann_result,
+        ann_topk_bucketed,
         suggest_n_planes,
     )
 
     # scales with the workload (a fixed-size stage cannot measure
-    # scaling) up to 100k vectors — beyond that the 8-table union
-    # dedup shuffle goes superlinear on this box and the stage would
-    # swamp the suite; candidate pairs ~ n * n_tables * target_bucket/2
+    # scaling) up to 100k vectors; larger corpora are the
+    # ann_topk_large rows below
     n_vec = min(max(n_docs // 400, 5000), 100_000)
     emb = spark.range(0, n_vec, 1, parts).select(
         F.col("id").alias("vec_id"),
@@ -356,32 +352,24 @@ def bench_queries(spark, sf_dir: str, n_docs: int, cpus: int):
     )
     np_ = suggest_n_planes(n_vec, target_bucket=16)
 
-    def _ann_rep():
-        # sidecar reaping is explicit now — release per rep so bench
-        # loops don't accumulate one matrix copy per invocation
-        r = ann_topk_arrow(emb, k=5, n_planes=np_)
-        n = r.count()
-        release_ann_result(r)
-        return n
+    # LATENCY BASELINE, not a headline stage: a small corpus on the
+    # default list-column input, measured so that path can't silently
+    # regress. It stays out of the headline wall-time sum and the
+    # scaling table so the headline trajectory stays comparable; the
+    # scale rows are ann_topk_large below.
+    timed(
+        "ann_topk",
+        lambda: ann_topk_bucketed(emb, k=5, n_planes=np_).count(),
+        n_vec,
+    )
 
-    # LATENCY BASELINE, not a headline stage: the broadcast path's
-    # ~7.5 s is driver-side matrix build + sidecar write at ANY
-    # parallelism (0.96x at 8->32 cores — latency-bound by design,
-    # like cosine_topk's exactness fence). It stays measured so the
-    # small-corpus path can't silently regress, but it is excluded
-    # from the headline wall-time sum and the scaling table; the
-    # scale path is ann_topk_large below.
-    timed("ann_topk", _ann_rep, n_vec)
-
-    # ANN BEYOND the broadcast cap: ann_topk_bucketed at 2M vectors —
-    # no driver-side matrix, no sidecar; embeddings cross the wire
-    # once per table as fixed-stride BINARY cells (the layout a 100-TB
-    # embedding store uses). Partition count pinned (128) so the 8- vs
-    # 32-core scaling runs compare the identical job; 128 measured
-    # best for 8->32 scaling (4 waves at 32 average out bucket-skew
-    # stragglers; 64's 2-wave schedule lost ~10% to wave tails).
-    from geokit_spark.operators.similarity import ann_topk_bucketed
-
+    # ANN at scale: ann_topk_bucketed at 2M vectors — embeddings
+    # cross the wire once per table as fixed-stride BINARY cells (the
+    # layout a 100-TB embedding store uses). Partition count pinned
+    # (128) so the 8- vs 32-core scaling runs compare the identical
+    # job; 128 measured best for 8->32 scaling (4 waves at 32 average
+    # out bucket-skew stragglers; 64's 2-wave schedule lost ~10% to
+    # wave tails).
     n_large = int(os.environ.get("GEOKIT_BENCH_ANN_LARGE", "2000000"))
     npl = suggest_n_planes(n_large, target_bucket=64)
     seq = iter(range(100))  # vary the id offset so reps can't be
@@ -614,7 +602,9 @@ def calibrate_quick(n_procs: int) -> dict:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     n_docs = int(os.environ.get("GEOKIT_BENCH_DOCS", "20000000"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
     cal = calibrate_quick(cpus)
@@ -635,9 +625,8 @@ def main():
     results = bench_queries(spark, sf_dir, n_docs, cpus)
     # latency baselines: measured (so they can't silently regress) but
     # excluded from the headline wall-time sum, per-stage tables and
-    # the scaling run — their cost is driver-side setup latency, not
-    # distributed compute (ann_topk = broadcast-path matrix build +
-    # sidecar write; 0.96x at 8->32 cores by design)
+    # the scaling run (ann_topk = the small-corpus ANN row; the scale
+    # ANN rows are ann_topk_large / ann_topk_large_q8)
     latency = {
         k: results.pop(k) for k in _LATENCY_BASELINES if k in results
     }

@@ -210,10 +210,3 @@ def classify_subcells(
         )
         out.extend((int(i), IN) for i in ids[free][inside])
     return out
-
-
-def cells_of_class(cls: np.ndarray, which: int) -> list[int]:
-    """Flattened cell ids (cx * grid_n + cy) of a class."""
-    n = cls.shape[0]
-    cxs, cys = np.nonzero(cls == which)
-    return (cxs.astype(np.int64) * n + cys.astype(np.int64)).tolist()

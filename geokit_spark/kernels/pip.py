@@ -68,24 +68,6 @@ def points_in_poly_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     return out
 
 
-def points_in_poly_multi(
-    px: np.ndarray, py: np.ndarray, poly_ids: np.ndarray, polys: dict
-) -> np.ndarray:
-    """PIP where each point tests against its own polygon (post-join
-    refinement). poly_ids: int array (N,); polys: {id: verts} where
-    verts is a single ring or a ring list (holes)."""
-    out = np.zeros(len(px), dtype=bool)
-    for pid in np.unique(poly_ids):
-        m = poly_ids == pid
-        out[m] = points_in_poly_rings(px[m], py[m], polys[int(pid)])
-    return out
-
-
-def bbox_overlaps(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1):
-    """Vectorized closed-interval bbox overlap test."""
-    return (ax0 <= bx1) & (bx0 <= ax1) & (ay0 <= by1) & (by0 <= ay1)
-
-
 def poly_area(verts) -> float:
     """Shoelace area (positive regardless of winding)."""
     vx = np.asarray([v[0] for v in verts], dtype=np.float64)

@@ -219,18 +219,3 @@ def union_area_fr(regions_verts: list) -> Fraction:
     (outers positive, holes negative)."""
     rings = union_regions(_normalize_region(regions_verts))
     return sum((signed_area2(r) for r in rings), Fraction(0)) / 2
-
-
-def union_polygons(regions_verts: list, n_groups: int = 4):
-    """The reference union TREE shape: polygons are unioned in groups
-    (the map-side partial), then the partial regions are unioned once
-    more (the tree root) — associative by set semantics, so the result
-    is independent of grouping. Returns (rings, exact_area_fraction)
-    with rings as float vertex lists (outers CCW, holes CW)."""
-    norm = _normalize_region(regions_verts)
-    groups = [norm[i::n_groups] for i in range(n_groups)]
-    partials = [union_regions(g) for g in groups if g]
-    final = union_regions(partials)
-    area = sum((signed_area2(r) for r in final), Fraction(0)) / 2
-    rings_f = [[(float(x), float(y)) for x, y in r] for r in final]
-    return rings_f, area

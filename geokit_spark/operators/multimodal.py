@@ -2,9 +2,9 @@
 
 Images/audio/video are opaque `binary` columns with typed metadata.
 The Spark-side plumbing — schema, partition-preserving mapInPandas,
-Arrow batch shapes — is real and tested; the actual codec decode is
-stubbed behind NotImplementedError (no image/audio libs in this
-container) with a deterministic fake used for tests/oracles.
+Arrow batch shapes — is real and tested; no pixel/sample codec ships
+(no image/audio codec library is a dependency), so a deterministic
+fake decode stands in for tests/oracles.
 
 At 100 TB: binary payloads dominate row size, so the decode stage is
 mapInPandas (streaming batches, no pivot/shuffle), metadata-only
@@ -24,14 +24,6 @@ def with_payload(docs: DataFrame) -> DataFrame:
     """Attach the opaque binary column (here: utf-8 of text — stands in
     for an image/audio blob; byte-exactness is the per-row invariant)."""
     return docs.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
-
-
-def decode_image(payload: bytes) -> np.ndarray:
-    """REAL decode — requires an image codec, not shipped here."""
-    raise NotImplementedError(
-        "image codecs are not available in this environment; "
-        "use fake_decode_meta for the deterministic test double"
-    )
 
 
 def fake_decode_meta(n_bytes: np.ndarray):
@@ -216,42 +208,6 @@ def build_container(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame({"doc_id": d, "payload": payloads})
 
     return src.mapInPandas(fn, schema="doc_id long, payload binary")
-
-
-def parse_container(payloads: DataFrame) -> DataFrame:
-    """(doc_id, width, height, n_frames, sample_rate, body_len):
-    BYTE-WISE header parse (magic check + little-endian field reads
-    at fixed offsets) — the real container-scan stage. Raises on a
-    corrupt magic; body length from the remaining bytes."""
-    def fn(batches):
-        for pdf in batches:
-            rows = {
-                "doc_id": pdf["doc_id"].to_numpy(np.int64),
-                "width": [], "height": [], "n_frames": [],
-                "sample_rate": [], "body_len": [],
-            }
-            for buf in pdf["payload"]:
-                b = bytes(buf)
-                if b[:4] != _MAGIC:
-                    raise ValueError("corrupt container magic")
-                hdr = np.frombuffer(b[: _HEADER_LEN], dtype=[
-                    ("magic", "S4"), ("w", "<u4"), ("h", "<u4"),
-                    ("fr", "<u2"), ("sr", "<u4"),
-                ])[0]
-                rows["width"].append(int(hdr["w"]))
-                rows["height"].append(int(hdr["h"]))
-                rows["n_frames"].append(int(hdr["fr"]))
-                rows["sample_rate"].append(int(hdr["sr"]))
-                rows["body_len"].append(len(b) - _HEADER_LEN)
-            yield pd.DataFrame(rows)
-
-    return payloads.mapInPandas(
-        fn,
-        schema=(
-            "doc_id long, width long, height long, n_frames long, "
-            "sample_rate long, body_len long"
-        ),
-    )
 
 
 def container_roundtrip(docs: DataFrame) -> DataFrame:

@@ -12,7 +12,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,11 +29,8 @@ N_TABLES = 8  # independent hash tables; candidates = union over tables
 # (B*g*g <= this): bounds each worker's transient to ~8 MB float64.
 # Measured at 2M vecs / 32 workers: 1<<20 beats 1<<17 (per-chunk
 # overhead) and 1<<23 (concurrent-worker allocator thrash, the
-# round-2 'large per-batch temporaries' pitfall); env-tunable for
-# other worker/core geometries.
-_ANN_CHUNK_ELEMS = int(
-    __import__("os").environ.get("GEOKIT_ANN_CHUNK_ELEMS", str(1 << 20))
-)
+# round-2 'large per-batch temporaries' pitfall).
+_ANN_CHUNK_ELEMS = 1 << 20
 
 
 def suggest_n_planes(n_rows: int, target_bucket: int = 64) -> int:
@@ -96,17 +92,18 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every vector (excluding self).
     Returns (vec_id, rank, neighbor_id). O(n^2) crossJoin — the
-    CORRECTNESS BASELINE, never a scale path (ann_topk / ivf_topk are
-    the verified scale paths). Guarded: refuses inputs larger than
-    max_rows so the baseline cannot be run at scale by accident; pass
-    max_rows=None to override deliberately."""
+    CORRECTNESS BASELINE, never a scale path (ann_topk_bucketed /
+    ivf_topk_fixed are the verified scale paths). Guarded: refuses
+    inputs larger than max_rows so the baseline cannot be run at scale
+    by accident; pass max_rows=None to override deliberately."""
     if max_rows is not None:
         n = emb.count()
         if n > max_rows:
             raise ValueError(
                 f"cosine_topk is the O(n^2) exactness baseline: input has "
-                f"{n} rows > max_rows={max_rows}. Use ann_topk/ivf_topk at "
-                f"scale, or pass max_rows=None deliberately."
+                f"{n} rows > max_rows={max_rows}. Use ann_topk_bucketed or "
+                f"ivf_topk_fixed at scale, or pass max_rows=None "
+                f"deliberately."
             )
     a = emb.select(
         F.col("vec_id").alias("vec_id"), F.col("embedding").alias("ea")
@@ -234,10 +231,8 @@ def _lcg_centroid_component(j: int, dim: int) -> float:
 
 def ivf_centroids(n_lists: int = IVF_N_LISTS, dim: int = EMB_DIM):
     """Unit-norm fixed centroids. At 100 TB the coarse quantizer is
-    trained OFFLINE and shipped as literals (exactly this shape); the
-    data-dependent Lloyd variant remains available as ivf_topk for
-    recall experiments (its float means are partitioning-order
-    dependent, so it stays pytest-verified rather than oracle-hashed)."""
+    trained OFFLINE and shipped as literals (exactly this shape), so
+    list assignment is data-independent and oracle-reproducible."""
     cents = np.array(
         [[_lcg_centroid_component(j, d) for d in range(dim)] for j in range(n_lists)],
         dtype=np.float64,
@@ -306,132 +301,6 @@ def ivf_topk_fixed(
     )
 
 
-def ivf_topk(
-    emb: DataFrame, k: int = 5, n_lists: int = 16, n_probe: int = 4,
-    iters: int = 4,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: Lloyd-clustered centroid lists, each
-    query probes its n_probe nearest lists and re-scores exactly.
-
-    Scale shape: centroids live on the driver (n_lists rows); the
-    assignment pass is one broadcast-free column expression; the probe
-    join is an equijoin on list_id, so candidates are bounded by list
-    sizes — the standard IVF trade (recall vs n_probe)."""
-    e = emb.select("vec_id", "embedding")
-    # deterministic Lloyd on normalized vectors (cosine ~ dot on unit)
-    seeds = e.orderBy("vec_id").limit(n_lists).collect()
-    cents = np.stack(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seeds]
-    )
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
-    def assign_udf(cents_now: np.ndarray, probes_n: int):
-        c = cents_now.copy()
-
-        @F.pandas_udf(
-            T.StructType(
-                [
-                    T.StructField("list_id", T.IntegerType()),
-                    T.StructField("probes", T.ArrayType(T.IntegerType())),
-                ]
-            )
-        )
-        def assign(embs: pd.Series) -> pd.DataFrame:
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
-            dots = m @ c.T  # (n, n_lists)
-            order = np.argsort(-dots, axis=1)
-            return pd.DataFrame(
-                {
-                    "list_id": order[:, 0].astype("int32"),
-                    "probes": list(order[:, :probes_n].astype("int32")),
-                }
-            )
-
-        return assign
-
-    # Lloyd iterations: one Arrow pass assigns, one JVM agg recenters
-    for _ in range(iters):
-        a = e.withColumn("a", assign_udf(cents, 1)(F.col("embedding")))
-        rows = (
-            a.select(F.col("a.list_id").alias("list_id"), "embedding")
-            .groupBy("list_id")
-            .agg(*[
-                F.avg(F.element_at("embedding", d + 1)).alias(f"m{d}")
-                for d in range(EMB_DIM)
-            ])
-            .collect()
-        )
-        new = cents.copy()
-        for r in rows:
-            v = np.array([r[f"m{d}"] for d in range(EMB_DIM)], dtype=np.float64)
-            n = np.linalg.norm(v)
-            if n > 0:
-                new[int(r["list_id"])] = v / n
-        cents = new
-
-    final_assign = e.withColumn("a", assign_udf(cents, n_probe)(F.col("embedding")))
-    assigned = final_assign.select(
-        "vec_id", "embedding", F.col("a.list_id").alias("list_id")
-    )
-    probes = final_assign.select(
-        "vec_id",
-        F.col("embedding").alias("ea"),
-        F.explode("a.probes").alias("list_id"),
-    )
-
-    cand = probes.join(
-        assigned.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("eb"),
-            "list_id",
-        ),
-        "list_id",
-    ).filter(F.col("vec_id") != F.col("neighbor_id"))
-    cand = cand.withColumn("na", norm_col("ea")).withColumn("nb", norm_col("eb"))
-    sim = dot_col("ea", "eb") / (F.col("na") * F.col("nb"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "rank", "neighbor_id")
-    )
-
-
-_ANN_SIDECARS: list[str] = []  # staged .npy copies awaiting reap
-
-
-def _unlink_paths(paths):
-    import os
-
-    for p in paths:
-        try:
-            os.unlink(p)
-        except OSError:
-            pass  # already reaped / never materialized
-
-
-def release_ann_result(df) -> None:
-    """Reclaim the sidecar matrices staged for ONE ann_topk_arrow
-    result (its `_ann_sidecars` handle) once that DataFrame has been
-    materialized. No-op for DataFrames without the handle."""
-    paths = getattr(df, "_ann_sidecars", ())
-    _unlink_paths(paths)
-    for p in paths:
-        if p in _ANN_SIDECARS:
-            _ANN_SIDECARS.remove(p)
-
-
-def reap_ann_sidecars():
-    """Public hook for service loops: reclaim ALL staged ANN sidecar
-    files once every outstanding ann_topk_arrow result is consumed.
-    This is the ONLY bulk reap — ann_topk_arrow never deletes a prior
-    call's files implicitly, so two live (un-collected) ANN results
-    can coexist safely."""
-    _unlink_paths(_ANN_SIDECARS)
-    _ANN_SIDECARS.clear()
-
-
 def _plane_matrix(n_planes: int, n_tables: int) -> np.ndarray:
     """All tables' hyperplanes as one (n_tables * n_planes, EMB_DIM)
     float64 matrix (same _lcg_plane stream as the fold path)."""
@@ -445,222 +314,6 @@ def _plane_matrix(n_planes: int, n_tables: int) -> np.ndarray:
     )
 
 
-def ann_topk_arrow(
-    emb: DataFrame,
-    k: int = 5,
-    probe_bits: int = 0,
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-    max_broadcast_rows: int = 2_000_000,
-) -> DataFrame:
-    """Throughput variant of ann_topk: same multi-table
-    random-hyperplane LSH semantics, with (a) ALL tables' buckets
-    computed in ONE Arrow pass (numpy matmul against the plane matrix
-    — the 8x-per-table fold-lambda re-scan was the measured
-    bottleneck), and (b) exact re-scoring by indexing a BROADCAST
-    numpy embedding matrix from the candidate-pair stream (no
-    embedding-array join). Guarded by max_broadcast_rows: beyond it
-    the matrix doesn't fit executors and the join-based ann_topk(...,
-    rescore='arrow') is the path (at true 100-TB scale, IVF partition
-    layouts replace the broadcast). Sign/sim arithmetic is numpy
-    pairwise summation, so results can diverge from the fold path
-    only when a plane dot or a sim tie sits within one ULP —
-    set-equality on real data is pytest-verified."""
-    # Arrow collect (no pandas object arrays): the matrix build is the
-    # driver-side constant of this operator — toPandas + np.stack over
-    # 50k object rows measured ~10x slower than flattening the Arrow
-    # list buffer directly
-    tbl = emb.select("vec_id", "embedding").toArrow()
-    n = tbl.num_rows
-    if n > max_broadcast_rows:
-        raise ValueError(
-            f"ann_topk_arrow broadcasts the embedding matrix: {n} rows "
-            f"> max_broadcast_rows={max_broadcast_rows}. Use "
-            "ann_topk(rescore='arrow') or ivf_topk_fixed at this scale."
-        )
-    ids = np.asarray(tbl.column("vec_id").combine_chunks(), dtype=np.int64)
-    flat = np.asarray(
-        tbl.column("embedding").combine_chunks().flatten().to_numpy(
-            zero_copy_only=False
-        ),
-        dtype=np.float64,
-    ).reshape(n, EMB_DIM)
-    order = np.argsort(ids)
-    ids_sorted = ids[order]
-    M = flat[order]
-    # Sidecar precision follows the SOURCE column: float32 storage is
-    # lossless only when the column is array<float>; double columns
-    # (e.g. synthetic benches computing /1000.0) keep float64 so the
-    # sidecar never rounds. Norms are computed FROM THE STORED matrix
-    # either way, so numerator and denominator of each sim are always
-    # consistent (a float32 sidecar with float64-derived norms skewed
-    # sims ~1e-7 on double inputs and could flip near-tie ranks).
-    elem_type = emb.schema["embedding"].dataType.elementType
-    store_dtype = (
-        np.float32 if isinstance(elem_type, T.FloatType) else np.float64
-    )
-    M_store = M.astype(store_dtype)
-    norms = np.sqrt(
-        np.einsum("ij,ij->i", M_store.astype(np.float64),
-                  M_store.astype(np.float64))
-    )
-    P = _plane_matrix(n_planes, n_tables)
-    spark = emb.sparkSession
-    # Ship the matrix as an mmap-able SIDECAR FILE, not a pickled
-    # broadcast: broadcast.value makes EVERY python worker unpickle
-    # the full matrix (per-worker fixed cost that GROWS with worker
-    # count — measured as the stage's anti-scaling term at local[32]);
-    # np.load(mmap_mode='r') of a SparkFiles artifact shares the page
-    # cache across all workers on a node.
-    import os
-    import tempfile
-    import uuid
-
-    tag = uuid.uuid4().hex
-    tmp = tempfile.gettempdir()
-    paths = {}
-    for name, arr in (
-        ("ids", ids_sorted),
-        ("m", M_store),
-        ("norms", norms),
-    ):
-        p = os.path.join(tmp, f"annmat_{tag}_{name}.npy")
-        np.save(p, arr)
-        spark.sparkContext.addFile(p)
-        paths[name] = os.path.basename(p)
-    # Both the originals and the staged SparkFiles copies must outlive
-    # THIS job (the returned DataFrame is lazy, and executors fetch
-    # from the original URI at first task). Reaping is EXPLICIT only:
-    # per-result via release_ann_result(df) (the `_ann_sidecars`
-    # handle on the returned DataFrame, like pagerank's _edge_cache),
-    # or in bulk via reap_ann_sidecars() from a service loop — a new
-    # call never deletes a prior call's still-lazy result's files.
-    from pyspark import SparkFiles
-
-    root = SparkFiles.getRootDirectory()
-    call_sidecars = [
-        os.path.join(tmp, f"annmat_{tag}_{name}.npy") for name in paths
-    ] + [os.path.join(root, b) for b in paths.values()]
-    _ANN_SIDECARS.extend(call_sidecars)
-
-    def buckets_fn(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            earr = batch.column(1)
-            flat = np.asarray(earr.flatten().to_numpy(
-                zero_copy_only=False
-            ), dtype=np.float64).reshape(nb, EMB_DIM)
-            dots = flat @ P.T  # (nb, n_tables * n_planes)
-            bits = (dots > 0).astype(np.int64)
-            weights = np.tile(1 << np.arange(n_planes, dtype=np.int64),
-                              n_tables)
-            # bucket_t = t*2^planes + sum_p bit_p * 2^p
-            per = bits * weights
-            tb = np.add.reduceat(per, np.arange(0, n_tables * n_planes,
-                                                n_planes), axis=1)
-            tb = tb + (np.arange(n_tables, dtype=np.int64) << n_planes)[None, :]
-            vid = np.repeat(
-                np.asarray(batch.column(0), dtype=np.int64), n_tables
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(vid), pa.array(tb.ravel())],
-                ["vec_id", "bucket"],
-            )
-
-    buckets = emb.select("vec_id", "embedding").mapInArrow(
-        buckets_fn, schema="vec_id long, bucket long"
-    )
-    if probe_bits > 0:
-        flips = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                for p in range(min(probe_bits, n_planes))
-            ],
-        )
-        a = buckets.select(
-            "vec_id", F.explode(flips).alias("bucket")
-        )
-    else:
-        a = buckets
-    base = buckets.select(F.col("vec_id").alias("neighbor_id"), "bucket")
-    # NO distinct here: duplicates across tables survive to the
-    # per-partition pass, which dedupes them vectorized — this is the
-    # plan-shape win over the fold path: bucket-join shuffle +
-    # vec_id repartition = TWO shuffles total, no pair-distinct
-    # exchange and no 10M-row JVM window sort.
-    cand = (
-        a.join(base, "bucket")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id")
-        .repartition("vec_id")
-    )
-
-    def topk_fn(batches):
-        """One pass per partition: all candidates of a vec_id are
-        co-partitioned, so dedup + exact re-score + top-k select run
-        vectorized at partition end (lexsort by (vec, -sim, neighbor)
-        == the fold path's ORDER BY sim DESC, neighbor ASC)."""
-        import pyarrow as pa
-        from pyspark import SparkFiles
-
-        idx_ids = np.load(SparkFiles.get(paths["ids"]), mmap_mode="r")
-        m = np.load(SparkFiles.get(paths["m"]), mmap_mode="r")
-        nrm = np.load(SparkFiles.get(paths["norms"]), mmap_mode="r")
-        vas, vbs = [], []
-        for batch in batches:
-            if batch.num_rows:
-                vas.append(np.asarray(batch.column(0), dtype=np.int64))
-                vbs.append(np.asarray(batch.column(1), dtype=np.int64))
-        if not vas:
-            return
-        va = np.concatenate(vas)
-        vb = np.concatenate(vbs)
-        # dedup multi-table collisions
-        o = np.lexsort((vb, va))
-        va, vb = va[o], vb[o]
-        keep = np.r_[True, (va[1:] != va[:-1]) | (vb[1:] != vb[:-1])]
-        va, vb = va[keep], vb[keep]
-        ia = np.searchsorted(idx_ids, va)
-        ib = np.searchsorted(idx_ids, vb)
-        nb = len(va)
-        sim = np.empty(nb, dtype=np.float64)
-        CH = 16384  # bounded float64 gather transients (~8 MB/worker)
-        for s in range(0, nb, CH):
-            e = min(s + CH, nb)
-            # stored precision -> float64 math (norms were computed
-            # from the same stored matrix, so num/den are consistent)
-            sim[s:e] = np.einsum(
-                "ij,ij->i",
-                m[ia[s:e]].astype(np.float64),
-                m[ib[s:e]].astype(np.float64),
-            ) / (nrm[ia[s:e]] * nrm[ib[s:e]])
-        order = np.lexsort((vb, -sim, va))
-        sva = va[order]
-        starts = np.flatnonzero(np.r_[True, sva[1:] != sva[:-1]])
-        sizes = np.diff(np.r_[starts, len(sva)])
-        rank = np.arange(len(sva), dtype=np.int64) - np.repeat(starts, sizes)
-        sel = rank < k
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(sva[sel]),
-                pa.array((rank[sel] + 1).astype(np.int32)),
-                pa.array(vb[order][sel]),
-            ],
-            ["vec_id", "rank", "neighbor_id"],
-        )
-
-    out = cand.mapInArrow(
-        topk_fn, schema="vec_id long, rank int, neighbor_id long"
-    )
-    out._ann_sidecars = call_sidecars
-    return out
-
-
 def ann_topk_bucketed(
     emb: DataFrame,
     k: int = 5,
@@ -670,16 +323,16 @@ def ann_topk_bucketed(
     binary_dtype: str | None = None,
     quantize: str | None = None,
 ) -> DataFrame:
-    """ANN top-k BEYOND the broadcast cap: no driver-side matrix, no
-    sidecar file, no embedding-array joins — the shape that holds at
-    any corpus size. Same multi-table random-hyperplane LSH candidate
-    semantics as ann_topk(probe_bits=0) / ann_topk_arrow.
+    """ANN top-k at scale: no driver-side matrix, no embedding-array
+    joins — the shape that holds at any corpus size.
+    Same multi-table random-hyperplane LSH candidate semantics as
+    ann_topk(probe_bits=0).
 
     Physical plan (2 shuffles):
       1. one Arrow pass computes every table's bucket and ships each
          embedding to its buckets (n x n_tables rows — embeddings
-         cross the wire ONCE per table, vs once per CANDIDATE in the
-         join-based rescore);
+         cross the wire ONCE per table, vs once per CANDIDATE in
+         ann_topk's embedding joins);
       2. bucket-partitioned Arrow pass scores each bucket's all-pairs
          locally (one small gemm per bucket, memory = bucket contents,
          bounded by suggest_n_planes sizing) and emits only a PARTIAL
@@ -698,10 +351,10 @@ def ann_topk_bucketed(
     Skewed buckets cost compute (bucket_size^2 sims), not memory
     blowup — size n_planes with suggest_n_planes(n).
 
-    Sims use numpy gemm (pairwise summation) like ann_topk_arrow:
-    neighbor-SET equality with the fold path is pytest-verified;
-    probe_bits is not offered here (probe rows would ship embeddings
-    again — use ann_topk_arrow under the cap when probing matters).
+    Sims use numpy gemm (pairwise summation), not the fold path's
+    left-assoc sum: neighbor-SET equality with the fold path is
+    pytest-verified. probe_bits is not offered here (probe rows would
+    ship embeddings again — recover recall with n_tables instead).
 
     quantize='int16' | 'int8' — scalar-quantize the SHIPPED embedding
     cells (buckets still come from the float input, so candidate sets
@@ -1121,32 +774,12 @@ def ann_topk_bucketed(
     )
 
 
-def _dot_arrow_udf():
-    """Arrow-vectorized float64 dot product for the candidate
-    re-score: numpy pairwise summation instead of the JVM left fold —
-    ~40x the lambda fold's throughput on 64-dim candidates. Summation
-    ORDER differs from dot_col (pairwise vs left-assoc), so sims can
-    differ in final ULPs: this is the BENCH/scale path; the oracle
-    rows keep rescore='fold'. Top-k SETS agree on non-degenerate data
-    (verified by pytest — random vectors' sim gaps are astronomically
-    larger than an ULP)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.values).astype(np.float64)
-        mb = np.stack(b.values).astype(np.float64)
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-    return _dot
-
-
 def ann_topk(
     emb: DataFrame,
     k: int = 5,
     probe_bits: int = 0,
     n_planes: int = N_PLANES,
     n_tables: int = N_TABLES,
-    rescore: str = "fold",
 ) -> DataFrame:
     """Approximate top-k: candidates share any table's LSH bucket
     (multi-table random-hyperplane LSH). probe_bits adds 1-bit-flip
@@ -1192,13 +825,7 @@ def ann_topk(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("eb")
     ).withColumn("nb", norm_col("eb"))
     scored = cand.join(av, "vec_id").join(bv, "neighbor_id")
-    if rescore == "arrow":
-        dot = _dot_arrow_udf()(F.col("ea"), F.col("eb"))
-    elif rescore == "fold":
-        dot = dot_col("ea", "eb")
-    else:
-        raise ValueError(f"rescore must be 'fold' or 'arrow', got {rescore!r}")
-    sim = dot / (F.col("na") * F.col("nb"))
+    sim = dot_col("ea", "eb") / (F.col("na") * F.col("nb"))
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("sim", sim)

@@ -476,12 +476,6 @@ def zones_dict(zones=None) -> dict:
     return {z["zone_id"]: z["verts"] for z in (zones or fixtures.ZONES)}
 
 
-def zone_candidates_df(spark: SparkSession) -> DataFrame:
-    """Fixture wrapper kept for callers that want the broadcast
-    prefilter side of the aachen-analog zones."""
-    return spark.createDataFrame(_poly_candidates_pdf(zones_dict()))
-
-
 def docs_join_zones(
     spark: SparkSession, docs: DataFrame, refine: bool = False, zones=None
 ) -> DataFrame:

@@ -16,7 +16,9 @@ def get_spark(
     extra: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(
+            os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # local[N] puts driver + executor + every task thread in ONE JVM,
@@ -38,6 +40,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
+        # decode()/encode() replace malformed bytes with U+FFFD instead
+        # of failing the job: one bad page degrades one row
+        .config("spark.sql.legacy.codingErrorAction", "true")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM", default_mem),
@@ -49,11 +54,3 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -410,19 +410,19 @@ def extract_text(
     bytes, Arrow utf8): consumers that would otherwise wrap the
     column in decode(, 'UTF-8') skip that expression entirely —
     CollapseProject inlines a decode into EVERY downstream reference
-    (the corpus funnel carried 11 copies). Requires the html to be
-    valid UTF-8 (the byte scanner only slices at ASCII delimiters, so
-    it never splits a multi-byte character — invalid input bytes,
-    which the binary path passes through and a JVM decode would
-    replace with U+FFFD, raise here instead). Default stays binary:
-    the byte-exact audit contract."""
+    (the corpus funnel carried 11 copies). The byte scanner only
+    slices at ASCII delimiters, so it never splits a multi-byte
+    character; a batch holding invalid UTF-8 is rebuilt with each bad
+    sequence replaced by U+FFFD — the same text a JVM decode(,
+    'UTF-8') of the binary output gives — so one malformed page
+    degrades one row, never the job. Default stays binary: the
+    byte-exact audit contract."""
     extra = list(passthrough)
     out_type = "string" if as_string else "binary"
 
     def fn(batches):
         import pyarrow as pa
 
-        pa_type = pa.string() if as_string else pa.binary()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -431,8 +431,18 @@ def extract_text(
                 extract_main_text(v.as_py() if v.is_valid else b"")
                 for v in html
             ]
+            if not as_string:
+                out = pa.array(texts, type=pa.binary())
+            else:
+                try:
+                    out = pa.array(texts, type=pa.string())
+                except pa.ArrowInvalid:  # invalid UTF-8 in this batch
+                    out = pa.array(
+                        [t.decode("utf-8", "replace") for t in texts],
+                        type=pa.string(),
+                    )
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(texts, type=pa_type)]
+                [batch.column(0), out]
                 + [batch.column(2 + i) for i in range(len(extra))],
                 ["url", "text_extracted"] + extra,
             )

@@ -105,7 +105,8 @@ def main():
         "  semantics.",
         "- `embed_topk`/`cosine_topk` intentionally contain the only",
         "  crossJoin in the repo and are capped at max_rows (exactness",
-        "  baselines; ann_topk/ivf_topk are the verified scale paths).",
+        "  baselines; ann_topk_bucketed/ivf_topk_fixed are the verified",
+        "  scale paths).",
         "- `pagerank`: the degree-annotated edge set is persisted",
         "  (MEMORY_AND_DISK); its Arrow extraction subtree is echoed at",
         "  every InMemoryTableScan reference in the plan text (6 refs),",

@@ -203,10 +203,8 @@ def main():
         "(vec_id, bucket) row crosses the merge exchange instead of "
         "k rows — measured 102 -> 27 JVM-cpu-seconds of shuffle row "
         "framing at 32 cores, throughput +70%). The small-corpus "
-        "broadcast path (`ann_topk`, sidecar mmap re-score) is a "
-        "fenced LATENCY BASELINE as of round 7 — driver-side matrix "
-        "build + sidecar write dominate at any parallelism (0.96x at "
-        "8->32), so it is measured for regression cover "
+        "`ann_topk` row (ann_topk_bucketed on <=100k list-column "
+        "vectors) is a LATENCY BASELINE, measured for regression cover "
         "(`latency_baselines` in the full bench record) but excluded "
         "from this table and the headline wall-time sum.",
         "",

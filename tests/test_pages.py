@@ -135,6 +135,25 @@ def test_extract_text_passthrough(spark):
     assert "Exchange" not in plan
 
 
+def test_invalid_utf8_page_degrades_one_row(spark):
+    """A page with invalid UTF-8 yields one row with U+FFFD in place of
+    the bad byte on every extraction path, never a failed job."""
+    pages = spark.createDataFrame(
+        [("u1", b"<p>good page</p>"), ("u2", b"<p>caf\xe9 ok</p>")],
+        "url string, html binary",
+    ).coalesce(1)
+    as_str = P.extract_text(pages, as_string=True)
+    jvm = P.extract_text(pages).select(
+        "url", F.decode("text_extracted", "UTF-8").alias("text_extracted")
+    )
+    sql = P.extract_text_sql(pages).select(
+        "url", F.decode("text_extracted", "UTF-8").alias("text_extracted")
+    )
+    for df in (as_str, jvm, sql):
+        got = {r.url: r.text_extracted for r in df.collect()}
+        assert got == {"u1": "good page", "u2": "caf� ok"}
+
+
 def test_mirror_clusters_domains_vs_revisits(spark):
     """n_domains separates a cross-host mirror (2 domains) from a
     same-site revisit pair (1 domain); singletons are dropped."""

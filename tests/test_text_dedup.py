@@ -144,16 +144,6 @@ def test_cosine_topk_self_excluded_and_symmetric_sanity(spark):
     assert (got["vec_id"] != got["neighbor_id"]).all()
 
 
-def test_ivf_recall_vs_exact(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = similarity.cosine_topk(emb, k=5).toPandas()
-    ivf = similarity.ivf_topk(emb, k=5, n_lists=16, n_probe=4).toPandas()
-    e = exact.groupby("vec_id")["neighbor_id"].apply(set)
-    a = ivf.groupby("vec_id")["neighbor_id"].apply(set)
-    recalls = [len(e[v] & a.get(v, set())) / 5 for v in e.index]
-    assert np.mean(recalls) > 0.45, np.mean(recalls)
-
-
 def test_ann_recall_vs_exact(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = similarity.cosine_topk(emb, k=5).toPandas()
@@ -383,43 +373,6 @@ def test_minhash_all_empty_batch(spark, monkeypatch):
         assert list(r["sig"]) == expected
 
 
-def test_ann_arrow_rescore_matches_fold(spark):
-    """The Arrow re-score (pairwise numpy summation) must select the
-    same neighbor sets as the oracle-pinned left-fold dot — sim gaps
-    on the fixture dwarf the ULP-level summation-order differences."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    fold = similarity.ann_topk(emb, k=5, probe_bits=1).toPandas()
-    arrow = similarity.ann_topk(
-        emb, k=5, probe_bits=1, rescore="arrow"
-    ).toPandas()
-    f = fold.groupby("vec_id")["neighbor_id"].apply(set)
-    a = arrow.groupby("vec_id")["neighbor_id"].apply(set)
-    assert (f.index == a.index).all()
-    assert all(f[v] == a[v] for v in f.index)
-
-
-def test_ann_topk_arrow_matches_fold(spark):
-    """ann_topk_arrow (one-pass matmul buckets + broadcast-matrix
-    re-score) must produce the same neighbor sets as the oracle-pinned
-    fold path — divergence is possible only for plane dots or sim ties
-    within one ULP, which real data doesn't hit."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    fold = similarity.ann_topk(emb, k=5, probe_bits=1).toPandas()
-    arrow = similarity.ann_topk_arrow(emb, k=5, probe_bits=1).toPandas()
-    f = fold.groupby("vec_id")["neighbor_id"].apply(set)
-    a = arrow.groupby("vec_id")["neighbor_id"].apply(set)
-    assert (f.index == a.index).all()
-    assert all(f[v] == a[v] for v in f.index)
-
-
-def test_ann_topk_arrow_broadcast_guard(spark):
-    import pytest
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        similarity.ann_topk_arrow(emb, k=5, max_broadcast_rows=10)
-
-
 def test_token_class_counts_hand_case(spark):
     from geokit_spark.functions.text import token_class_exprs
 
@@ -459,71 +412,9 @@ def test_simhash_null_text_matches_jvm(spark):
     assert fast[1] == 0
 
 
-def test_ann_sidecar_release_handles(spark):
-    """ADVICE r5: a new ann_topk_arrow call must NOT reap a prior
-    call's sidecars (two live un-collected results coexist); reaping
-    is explicit — per-result via release_ann_result(df) or in bulk
-    via reap_ann_sidecars()."""
-    import glob
-    import os
-
-    from pyspark import SparkFiles
-
-    import tempfile
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    root = SparkFiles.getRootDirectory()
-    tmp = tempfile.gettempdir()
-    # delta-based: /tmp may hold annmat files from OTHER processes
-    pre_tmp = set(glob.glob(os.path.join(tmp, "annmat_*.npy")))
-    similarity.reap_ann_sidecars()
-    # two live results built BEFORE either is collected: both must
-    # still materialize (the old implicit reap broke the first one)
-    r1 = similarity.ann_topk_arrow(emb, k=3)
-    r2 = similarity.ann_topk_arrow(emb, k=3)
-    assert r1.count() > 0
-    assert r2.count() > 0
-    # per-result release removes exactly that call's files
-    r1_files = [p for p in r1._ann_sidecars if os.path.exists(p)]
-    assert r1_files
-    similarity.release_ann_result(r1)
-    assert not any(os.path.exists(p) for p in r1._ann_sidecars)
-    assert any(os.path.exists(p) for p in r2._ann_sidecars)
-    # bulk reap clears the rest
-    similarity.reap_ann_sidecars()
-    assert not glob.glob(os.path.join(root, "annmat_*.npy"))
-    # and no NEW originals left behind in tempdir
-    post_tmp = set(glob.glob(os.path.join(tmp, "annmat_*.npy")))
-    assert post_tmp - pre_tmp == set()
-
-
-def test_ann_topk_arrow_double_input_matches_fold(spark):
-    """ADVICE r4: array<double> inputs (e.g. synthetic bench
-    embeddings) must keep a float64 sidecar — the float32 rounding +
-    float64-norm mismatch skewed sims ~1e-7. With consistent storage
-    the arrow path equals the fold path on double columns too."""
-    from pyspark.sql import functions as F
-
-    n = 3000
-    emb = spark.range(0, n, 1, 8).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d -> "
-            "cast(pmod(hash(id * 64 + d), 1000) as float) / 1000.0 - 0.5)"
-        ).alias("embedding"),
-    )
-    assert dict(emb.dtypes)["embedding"] == "array<double>"
-    fold = similarity.ann_topk(emb, k=5).toPandas()
-    arrow = similarity.ann_topk_arrow(emb, k=5).toPandas()
-    f = fold.groupby("vec_id")["neighbor_id"].apply(set)
-    a = arrow.groupby("vec_id")["neighbor_id"].apply(set)
-    assert (f.index == a.index).all()
-    assert all(f[v] == a[v] for v in f.index)
-
-
 def test_ann_topk_bucketed_matches_fold(spark):
     """ann_topk_bucketed (bucket-local gemm + partial top-k + merge;
-    NO driver matrix, no sidecar) must produce the same neighbor sets
+    NO driver matrix) must produce the same neighbor sets
     as the oracle-pinned fold path on both float32 (parquet) and
     float64 (synthetic) inputs, and be deterministic across runs."""
     from pyspark.sql import functions as F
@@ -553,25 +444,16 @@ def test_ann_topk_bucketed_matches_fold(spark):
 
 
 def test_ann_topk_bucketed_no_driver_state(spark):
-    """The bucketed path must not stage sidecar files or collect the
-    matrix: plan is scan -> mapInArrow -> exchange(bucket) ->
-    mapInArrow -> exchange(vec_id) -> mapInArrow."""
-    import glob
-    import os
-
-    from pyspark import SparkFiles
-
+    """The bucketed path must not collect the matrix or cross into
+    Python per row: the plan is exactly scan -> mapInArrow ->
+    exchange(bucket) -> mapInArrow -> exchange(vec_id) -> mapInArrow."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.reap_ann_sidecars()
-    pre = set(glob.glob(os.path.join(SparkFiles.getRootDirectory(), "annmat_*")))
     out = similarity.ann_topk_bucketed(emb, k=3)
-    n = out.count()
-    assert n > 0
-    assert set(
-        glob.glob(os.path.join(SparkFiles.getRootDirectory(), "annmat_*"))
-    ) == pre
+    assert out.count() > 0
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 2 or "REPARTITION" in plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert plan.count("MapInArrow") == 3, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_ann_topk_bucketed_quantized_fidelity(spark):

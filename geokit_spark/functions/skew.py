@@ -10,9 +10,9 @@ level. AQE's skew-join split handles the join side
 
 Results are identical to the unsalted agg (sums/counts are
 associative); the shuffle spreads the hot key over n_salt reducers.
-The adaptive-resolution analog (finer JOIN_GRID_N cells, see
-operators.spatial_join) is the join-side counterpart mandated by the
-north rule.
+The spatial join needs no salting: it is a map-side broadcast join on
+JOIN_GRID_N cells (see operators.spatial_join), so a hot cell costs no
+reducer; salting is for the aggregations after it.
 """
 
 from __future__ import annotations

@@ -174,39 +174,3 @@ def classify_covering_cells(verts, grid_n: int = GRID_N) -> list[tuple[int, int]
         )
         out.extend((int(i), IN) for i in ids[free][inside])
     return out
-
-
-def classify_subcells(
-    verts, parent_cells: list[int], parent_n: int, factor: int
-) -> list[tuple[int, int]]:
-    """Adaptive resolution refinement (north rule): re-classify the
-    f x f subcells of the given parent cells at grid parent_n*factor.
-    Returns [(fine_cell_id, class)] with OUT dropped — a boundary-cell
-    row that finds no fine match is therefore outside the polygon.
-    Same conservative edge-bbox argument as classify_covering_cells.
-    Accepts a single ring or a ring list (holes)."""
-    rings = as_rings(verts)
-    rings_vxy = _opened_rings(rings)
-    fine_n = parent_n * factor
-    dx = XSPAN / fine_n
-    dy = YSPAN / fine_n
-    pc = np.asarray(parent_cells, dtype=np.int64)
-    pcx = pc // parent_n
-    pcy = pc % parent_n
-    sub = np.arange(factor, dtype=np.int64)
-    sx, sy = np.meshgrid(sub, sub, indexing="ij")
-    # fine cell indices for every (parent, subcell)
-    fx = (pcx[:, None] * factor + sx.ravel()[None, :]).ravel()
-    fy = (pcy[:, None] * factor + sy.ravel()[None, :]).ravel()
-    x0 = XMIN + fx * dx
-    y0 = YMIN + fy * dy
-    bnd = _any_ring_crosses(rings_vxy, x0, y0, dx, dy)
-    ids = fx * fine_n + fy
-    out = [(int(i), BOUNDARY) for i in ids[bnd]]
-    free = ~bnd
-    if free.any():
-        inside = points_in_poly_rings(
-            x0[free] + dx / 2, y0[free] + dy / 2, rings
-        )
-        out.extend((int(i), IN) for i in ids[free][inside])
-    return out

@@ -7,10 +7,14 @@ Physical shape (the scale story):
          ──refine──► exact ray-casting PIP, Arrow-batched pandas UDF,
                      applied ONLY to boundary-cell rows
 
-At 1000 executors the broadcast side stays tiny (cells × candidate
-ids); the points side never shuffles for a semi-join. Skewed hot cells
-are irrelevant here (map-side work only); they matter for groupBy
-stages, where AQE + salting handle them (see operators.knn and bench).
+The broadcast side is (cells × candidate ids) on the JOIN_GRID_N²
+prefilter grid; its size is a fixed per-call cost (built in pandas,
+shipped through createDataFrame, broadcast), while a coarser grid sends
+more rows to the exact test — JOIN_GRID_N is the measured optimum of
+that trade (see constants). The points side never shuffles for a
+semi-join. Skewed hot cells are irrelevant here (map-side work only);
+they matter for groupBy stages, where AQE + salting handle them (see
+operators.knn and bench).
 
 The polygon side is a PARAMETER everywhere (vertex lists / feature
 dicts), matching the reference contract where any geometry can filter
@@ -32,22 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import fixtures
-from ..constants import JOIN_GRID_N, XMIN, XSPAN, YMIN, YSPAN
+from ..constants import JOIN_GRID_N
 from ..functions.geo import join_cell_id, with_geocode
-from ..kernels.cells import (
-    BOUNDARY,
-    IN,
-    classify_covering_cells,
-    classify_subcells,
-)
+from ..kernels.cells import BOUNDARY, IN, classify_covering_cells
 from ..kernels.pip import as_rings, points_in_poly_rings
-
-# adaptive resolution refinement (north rule): boundary cells of the
-# coarse join grid are re-classified at REFINE x finer resolution, so
-# the exact-PIP UDF only sees the fine boundary band
-REFINE = 8
-FINE_N = JOIN_GRID_N * REFINE
-
 
 # Above this ring size the unrolled JVM crossing test blows the
 # whole-stage-codegen budget when fused into the broadcast join
@@ -124,8 +116,7 @@ def pip_multi_udf(polys: dict):
         return pd.Series(out)
 
     # same plan fence as pip_udf: keep the exact test ABOVE the
-    # prefilter joins so only the (fine) boundary band pays the
-    # Python crossing
+    # prefilter join so only the boundary band pays the Python crossing
     return _udf.asNondeterministic()
 
 
@@ -235,43 +226,8 @@ def _poly_candidates_pdf(polys: dict, grid_n: int = JOIN_GRID_N) -> pd.DataFrame
     return _CELL_CACHE[key]
 
 
-def _poly_fine_pdf(polys: dict, grid_n: int = JOIN_GRID_N) -> pd.DataFrame:
-    """Level-2 refinement map: boundary coarse cells re-classified at
-    grid_n*REFINE (north rule: adaptive resolution refinement)."""
-    key = ("fine", _polys_key(polys), grid_n, REFINE)
-    if key not in _CELL_CACHE:
-        coarse = _poly_candidates_pdf(polys, grid_n)
-        frames = []
-        for pid, verts in polys.items():
-            zb = coarse[
-                (coarse.zone_id == int(pid)) & (coarse.cell_class == BOUNDARY)
-            ]
-            fine = classify_subcells(verts, zb["cell_id"].tolist(), grid_n, REFINE)
-            if fine:
-                arr = np.asarray(fine, dtype=np.int64)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "fine_id": arr[:, 0],
-                            "zone_id": np.int32(pid),
-                            "fine_class": arr[:, 1].astype(np.int32),
-                        }
-                    )
-                )
-        _cache_put(key, pd.concat(frames, ignore_index=True))
-    return _CELL_CACHE[key]
-
-
-def _fine_cell_col():
-    fx = F.floor((F.col("lon") - F.lit(XMIN)) * F.lit(FINE_N / XSPAN))
-    fy = F.floor((F.col("lat") - F.lit(YMIN)) * F.lit(FINE_N / YSPAN))
-    fx = F.least(F.greatest(fx, F.lit(0)), F.lit(FINE_N - 1))
-    fy = F.least(F.greatest(fy, F.lit(0)), F.lit(FINE_N - 1))
-    return fx * F.lit(FINE_N) + fy
-
-
 def _points_join_polygons_udf(
-    spark: SparkSession, pts: DataFrame, polys: dict, refine: bool
+    spark: SparkSession, pts: DataFrame, polys: dict
 ) -> DataFrame:
     """Complex-ring fallback: the round-1 union shape — interior cells
     JVM-side, the boundary band through pip_multi_udf (Arrow)."""
@@ -279,30 +235,12 @@ def _points_join_polygons_udf(
     keyed = pts.withColumn("cell_id", join_cell_id(F.col("lon"), F.col("lat")))
     pairs = keyed.join(F.broadcast(cand), "cell_id", "inner")
     interior = pairs.filter(F.col("cell_class") == IN).drop("cell_class")
-    exact_udf = pip_multi_udf(polys)
-    if not refine:
-        boundary = (
-            pairs.filter(F.col("cell_class") == BOUNDARY)
-            .drop("cell_class")
-            .filter(exact_udf(F.col("lon"), F.col("lat"), F.col("zone_id")))
-        )
-        return interior.unionByName(boundary)
-    fine_map = spark.createDataFrame(_poly_fine_pdf(polys))
-    bnd = (
+    boundary = (
         pairs.filter(F.col("cell_class") == BOUNDARY)
         .drop("cell_class")
-        .withColumn("fine_id", _fine_cell_col())
-        .join(F.broadcast(fine_map), ["fine_id", "zone_id"], "left")
+        .filter(pip_multi_udf(polys)(F.col("lon"), F.col("lat"), F.col("zone_id")))
     )
-    fine_in = bnd.filter(F.col("fine_class") == IN).drop(
-        "fine_id", "fine_class"
-    )
-    exact = (
-        bnd.filter(F.col("fine_class") == BOUNDARY)
-        .filter(exact_udf(F.col("lon"), F.col("lat"), F.col("zone_id")))
-        .drop("fine_id", "fine_class")
-    )
-    return interior.unionByName(fine_in).unionByName(exact)
+    return interior.unionByName(boundary)
 
 
 def _points_join_polygons_rings_jvm(
@@ -312,7 +250,6 @@ def _points_join_polygons_rings_jvm(
     ringed: dict,
     max_rings: int,
     max_ring_verts: int,
-    refine: bool,
 ) -> DataFrame:
     """Donut-zone fast path: same one-scan broadcast-join plan as the
     flat-array form, with boundary candidate rows carrying their
@@ -348,47 +285,25 @@ def _points_join_polygons_rings_jvm(
         F.col("lon"), F.col("lat"), F.col("_rxs"), F.col("_rys"),
         max_rings=max_rings, max_verts=max_ring_verts,
     )
-    if not refine:
-        return pairs.filter(
-            (F.col("cell_class") == IN)
-            | ((F.col("cell_class") == BOUNDARY) & exact_jvm)
-        ).drop(*drop_aux)
-    interior = pairs.filter(F.col("cell_class") == IN).drop(*drop_aux)
-    fine_map = spark.createDataFrame(_poly_fine_pdf(polys))
-    bnd = (
-        pairs.filter(F.col("cell_class") == BOUNDARY)
-        .drop("cell_class")
-        .withColumn("fine_id", _fine_cell_col())
-        .join(F.broadcast(fine_map), ["fine_id", "zone_id"], "left")
-    )
-    fine_in = bnd.filter(F.col("fine_class") == IN).drop(
-        "fine_id", "fine_class", "_rxs", "_rys"
-    )
-    exact = (
-        bnd.filter(F.col("fine_class") == BOUNDARY)
-        .filter(exact_jvm)
-        .drop("fine_id", "fine_class", "_rxs", "_rys")
-    )
-    return interior.unionByName(fine_in).unionByName(exact)
+    return pairs.filter(
+        (F.col("cell_class") == IN)
+        | ((F.col("cell_class") == BOUNDARY) & exact_jvm)
+    ).drop(*drop_aux)
 
 
 def points_join_polygons(
-    spark: SparkSession, pts: DataFrame, polys: dict, refine: bool = False
+    spark: SparkSession, pts: DataFrame, polys: dict
 ) -> DataFrame:
     """Inner spatial join: (point, zone_id) pairs where the point is
     inside polys[zone_id]. `pts` needs lon/lat columns; polys is
     {poly_id: verts} (arbitrary polygon set — the join's broadcast
     side). One point may match several overlapping polygons. Only
-    boundary-cell candidates reach the Python refine; interior-cell
+    boundary-cell candidates reach the exact test; interior-cell
     candidates are accepted JVM-side.
 
-    refine=True adds the level-2 adaptive resolution split (north
-    rule): boundary rows re-key at FINE_N against a refinement map, so
-    only the thin fine band hits the UDF. Measured trade-off on this
-    box: the extra broadcast join + third union branch costs more than
-    the UDF it saves for 4-vertex zones (ray-casting 4 edges is ~as
-    cheap as the join) — it pays off when polygons are complex enough
-    that exact PIP dominates (100+-vertex coastlines etc.)."""
+    Resolution is the single JOIN_GRID_N grid: a second, finer split
+    of the boundary cells cost more (one more broadcast join and union
+    branch) than the exact test it saved for the fixture zones."""
     from ..functions.geo import pip_array_col
 
     # candidate map with the polygon vertex ARRAYS inlined on boundary
@@ -412,16 +327,16 @@ def points_join_polygons(
             len(r) for rs in ringed.values() for r in rs
         )
         if max_rings * max_ring_verts > _JVM_PIP_MAX_VERTS:
-            return _points_join_polygons_udf(spark, pts, polys, refine)
+            return _points_join_polygons_udf(spark, pts, polys)
         return _points_join_polygons_rings_jvm(
-            spark, pts, polys, ringed, max_rings, max_ring_verts, refine
+            spark, pts, polys, ringed, max_rings, max_ring_verts
         )
     opened = {int(pid): _open(v) for pid, v in polys.items()}
     max_verts = max(len(v) for v in opened.values())
     if max_verts > _JVM_PIP_MAX_VERTS:
         # complex rings blow the codegen budget (see points_in_polygon)
         # — Arrow-UDF boundary band instead of the unrolled expression
-        return _points_join_polygons_udf(spark, pts, polys, refine)
+        return _points_join_polygons_udf(spark, pts, polys)
     cpdf = _poly_candidates_pdf(polys).copy()
     is_b = cpdf["cell_class"].to_numpy() == BOUNDARY
     zid = cpdf["zone_id"].to_numpy()
@@ -437,38 +352,18 @@ def points_join_polygons(
     keyed = pts.withColumn("cell_id", join_cell_id(F.col("lon"), F.col("lat")))
     pairs = keyed.join(F.broadcast(cand), "cell_id", "inner")
     drop_aux = ["cell_class", "_pxs", "_pys"]
-    interior = pairs.filter(F.col("cell_class") == IN).drop(*drop_aux)
     exact_jvm = pip_array_col(
         F.col("lon"), F.col("lat"), F.col("_pxs"), F.col("_pys"),
         max_verts=max_verts,
     )
-
-    if not refine:
-        # one scan, one broadcast join, one codegen filter: interior
-        # cells pass unconditionally, boundary cells evaluate the
-        # unrolled crossing test — no union, so the 100M-row side is
-        # read once (the union form re-derived the join per branch)
-        return pairs.filter(
-            (F.col("cell_class") == IN)
-            | ((F.col("cell_class") == BOUNDARY) & exact_jvm)
-        ).drop(*drop_aux)
-
-    fine_map = spark.createDataFrame(_poly_fine_pdf(polys))
-    bnd = (
-        pairs.filter(F.col("cell_class") == BOUNDARY)
-        .drop("cell_class")
-        .withColumn("fine_id", _fine_cell_col())
-        .join(F.broadcast(fine_map), ["fine_id", "zone_id"], "left")
-    )
-    fine_in = bnd.filter(F.col("fine_class") == IN).drop(
-        "fine_id", "fine_class", "_pxs", "_pys"
-    )
-    exact = (
-        bnd.filter(F.col("fine_class") == BOUNDARY)
-        .filter(exact_jvm)
-        .drop("fine_id", "fine_class", "_pxs", "_pys")
-    )
-    return interior.unionByName(fine_in).unionByName(exact)
+    # one scan, one broadcast join, one codegen filter: interior cells
+    # pass unconditionally, boundary cells evaluate the unrolled
+    # crossing test — no union, so the 100M-row side is read once (the
+    # union form re-derived the join per branch)
+    return pairs.filter(
+        (F.col("cell_class") == IN)
+        | ((F.col("cell_class") == BOUNDARY) & exact_jvm)
+    ).drop(*drop_aux)
 
 
 def zones_dict(zones=None) -> dict:
@@ -477,10 +372,8 @@ def zones_dict(zones=None) -> dict:
 
 
 def docs_join_zones(
-    spark: SparkSession, docs: DataFrame, refine: bool = False, zones=None
+    spark: SparkSession, docs: DataFrame, zones=None
 ) -> DataFrame:
     """Inner spatial join of geocoded documents vs a zone feature list
     (defaults to the aachen-analog fixtures)."""
-    return points_join_polygons(
-        spark, with_geocode(docs), zones_dict(zones), refine=refine
-    )
+    return points_join_polygons(spark, with_geocode(docs), zones_dict(zones))

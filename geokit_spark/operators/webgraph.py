@@ -228,7 +228,10 @@ def pagerank(
     cluster size and against a sequential oracle.
 
     nodes: one-column (doc_id) frame enumerating the vertex set
-    (dangling in-link-free nodes still score PR_BASE).
+    (dangling in-link-free nodes still score PR_BASE). Edges whose
+    source is not in ``nodes`` carry nothing (such a source has no
+    score, as in the oracle's NULL left join); a vertex's outdeg still
+    counts its edges to non-vertices.
 
     Plan (r8 restructure — identical integer results, oracle-proved):
     the per-iteration ``nodes LEFT JOIN contrib`` of the r7 shape is
@@ -250,9 +253,13 @@ def pagerank(
     # subtree reuses the cached partitions instead of re-running the
     # upstream extraction (measured: 3 Arrow re-extractions without
     # this). MEMORY_AND_DISK — at cluster scale the edge set is the
-    # big operand and must spill, not OOM.
+    # big operand and must spill, not OOM. The semi-join keeps only
+    # edges whose source is a vertex, once, inside the cached frame.
     e = (
         edges.select("src_id", "dst_id")
+        .join(
+            nodes.select(F.col("doc_id").alias("src_id")), "src_id", "left_semi"
+        )
         .join(deg.hint("shuffle_hash"), "src_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -9,6 +9,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem_gb(cores: int, mem_total_kb: int | None) -> int:
+    """Default JVM heap (GiB) for a local[cores] session: 1.5 GiB per
+    task slot with a 16 GiB floor, clamped to 0.6 x MemTotal so the
+    default always fits the host (the clamp may go below the floor).
+    mem_total_kb None (unknown RAM) skips the clamp."""
+    want = max(16, (3 * cores + 1) // 2)
+    if mem_total_kb is None:
+        return want
+    return max(1, min(want, int(0.6 * mem_total_kb) >> 20))
+
+
+def _mem_total_kb() -> int | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
 def get_spark(
     app: str = "geokit_spark",
     cores: int | None = None,
@@ -28,8 +50,9 @@ def get_spark(
     # left 0.5 GiB/slot and the bench's 80M-row stages accrued GC debt
     # that inflated every LATER stage ~15-30% (measured: suite 40.7 ->
     # 35.9 s, ann_topk_large 7.4-8.8 -> 6.5 s at 48g, retries 5 -> 1).
+    # Clamped to 0.6 x MemTotal (see default_driver_mem_gb).
     # SPARK_DRIVER_MEM still overrides for other geometries.
-    default_mem = f"{max(16, (3 * cores + 1) // 2)}g"
+    default_mem = f"{default_driver_mem_gb(cores, _mem_total_kb())}g"
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import struct
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not an installed or fixed copy
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 import numpy as np  # noqa: E402

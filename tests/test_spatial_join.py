@@ -6,6 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from geokit_spark import fixtures
+from geokit_spark.constants import JOIN_GRID_N, XMIN, XSPAN, YMIN, YSPAN
 from geokit_spark.kernels.geocode import geocode
 from geokit_spark.kernels.pip import points_in_poly
 from geokit_spark.operators import spatial_join
@@ -188,9 +189,7 @@ def test_zones_holes_jvm_fast_path_plan_and_parity(spark):
     # '*(n)' prefixes mark whole-stage-codegen spans in the final plan
     assert "*(" in plan and "BroadcastHashJoin" in plan
     ref = (
-        _points_join_polygons_udf(
-            spark, pts, fixtures.ZONES_HOLES_DICT, refine=False
-        )
+        _points_join_polygons_udf(spark, pts, fixtures.ZONES_HOLES_DICT)
         .select("doc_id", "zone_id")
         .toPandas()
     )
@@ -238,3 +237,75 @@ def test_zones_holes_oversized_rings_fall_back_to_udf(spark):
     semi = points_in_polygon(spark, pts, [outer, hole])
     assert sorted(r["doc_id"] for r in joined.select("doc_id").collect()) == \
         sorted(r["doc_id"] for r in semi.select("doc_id").collect())
+
+
+def test_candidate_broadcast_size_pinned():
+    """The broadcast candidate maps are rebuilt, shipped and broadcast
+    on every join call, so their size is a fixed per-call cost: the
+    115 fixture zones keep under 20k rows and the 24-vertex region
+    under 8k (a 512^2 grid gave 265,110 and 115,135)."""
+    from geokit_spark.operators.spatial_join import (
+        _poly_candidates_pdf,
+        _polygon_cells_pdf,
+        zones_dict,
+    )
+
+    assert len(_poly_candidates_pdf(zones_dict())) <= 20_000
+    assert len(_polygon_cells_pdf(fixtures.REGION_VERTS)) <= 8_000
+
+
+def _grid_line_probes():
+    """Probe points exactly on JOIN_GRID_N cell corners and cell-edge
+    midpoints over the whole bbox: the points where cell keying
+    (floor of a product) and cell classification (inflated cell
+    rects) could disagree."""
+    n = JOIN_GRID_N
+    ticks = np.arange(2 * n + 1, dtype=np.float64) / (2 * n)
+    fx, fy = np.meshgrid(ticks, ticks, indexing="ij")
+    i, j = np.meshgrid(np.arange(2 * n + 1), np.arange(2 * n + 1), indexing="ij")
+    # corners (both even) and edge midpoints (one odd); drop centers
+    keep = ((i % 2) == 0) | ((j % 2) == 0)
+    lon = XMIN + fx[keep] * XSPAN
+    lat = YMIN + fy[keep] * YSPAN
+    return np.arange(len(lon), dtype=np.int64), lon, lat
+
+
+def _grid_aligned_polys():
+    """Polygons whose edges run along grid lines or through grid
+    corners, so probes sit on a cell border AND a polygon edge."""
+
+    def at(i, j):
+        return (XMIN + i / JOIN_GRID_N * XSPAN, YMIN + j / JOIN_GRID_N * YSPAN)
+
+    return {
+        1: [at(10, 20), at(50, 20), at(50, 70), at(10, 70)],
+        2: [at(90, 40), at(110, 60), at(90, 80), at(70, 60)],
+    }
+
+
+def test_grid_line_probes_match_brute_force(spark):
+    """Zones joins (JVM exact test) and the region semi-join (Arrow-UDF
+    exact test) agree with the numpy kernel on every grid-line probe."""
+    ids, lon, lat = _grid_line_probes()
+    probes = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "lon": lon, "lat": lat})
+    )
+
+    for polys in (spatial_join.zones_dict(), _grid_aligned_polys()):
+        got = spatial_join.points_join_polygons(spark, probes, polys).select(
+            "doc_id", "zone_id"
+        )
+        expected = {
+            (int(d), int(pid))
+            for pid, verts in polys.items()
+            for d in ids[points_in_poly(lon, lat, verts)]
+        }
+        pairs = [tuple(r) for r in got.collect()]
+        assert len(pairs) == len(set(pairs))
+        assert set(pairs) == expected
+
+    got = spatial_join.points_in_polygon(spark, probes, fixtures.REGION_VERTS)
+    have = [r["doc_id"] for r in got.select("doc_id").collect()]
+    expected = ids[points_in_poly(lon, lat, fixtures.REGION_VERTS)]
+    assert len(have) == len(expected)
+    assert set(have) == set(expected.tolist())

@@ -111,7 +111,8 @@ def _py_pagerank(edges, nodes, iters=3):
     for _ in range(iters):
         nxt = {v: PR_BASE for v in nodes}
         for s, d in edges:
-            nxt[d] += (85 * scores[s]) // (100 * outdeg[s])
+            if s in scores and d in nxt:  # non-vertex ends carry nothing
+                nxt[d] += (85 * scores[s]) // (100 * outdeg[s])
         scores = nxt
     return scores
 
@@ -128,6 +129,20 @@ def test_pagerank_matches_sequential(spark, parts):
     want = _py_pagerank(edges, nodes)
     assert got == want
     assert got[3] == PR_BASE  # disconnected node: restart mass only
+
+
+def test_pagerank_node_subset_drops_outside_sources(spark):
+    """Sources outside the vertex set contribute nothing (the oracle's
+    left join finds no score for them); a vertex's outdeg still counts
+    its edge to a non-vertex."""
+    edges = [(0, 1), (1, 2), (2, 0), (9, 1), (9, 2), (2, 9)]
+    nodes = [0, 1, 2]  # 9 is a crawled-but-filtered page
+    e = spark.createDataFrame(edges, ["src_id", "dst_id"])
+    n = spark.createDataFrame([(v,) for v in nodes], ["doc_id"])
+    got = {r["doc_id"]: r["s"] for r in pagerank(e, n, iters=3).collect()}
+    assert got == _py_pagerank(edges, nodes)
+    inner = [(s, d) for s, d in edges if s != 9]
+    assert got == _py_pagerank(inner, nodes)
 
 
 def test_pagerank_multiedge_self_loop(spark):

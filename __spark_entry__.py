@@ -118,12 +118,12 @@ def q_pip_zones_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pip_zones_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner spatial join against a zone set containing a DONUT zone
-    (fixtures.ZONES_HOLES_DICT): boundary candidate rows carry their
-    zone's ring list and the even-odd test runs as the unrolled
-    pip_rings_array_col whole-stage-codegen expression — the plan
-    shape no longer degrades to the Arrow-UDF fallback the moment a
-    real zone has a lake (reference accepts holes in every predicate,
-    geom.py:261-345, vector.py:365-434)."""
+    (fixtures.ZONES_HOLES_DICT): boundary candidate rows carry one
+    vertex-array pair per ring and the even-odd test runs as the
+    unrolled pip_array_col whole-stage-codegen expression, the same
+    codegen path as the flat zones — a zone with a lake does not
+    degrade the plan to the Arrow-UDF path (reference accepts holes in
+    every predicate, geom.py:261-345, vector.py:365-434)."""
     pairs = spatial_join.points_join_polygons(
         spark,
         with_geocode(_docs(spark, sf_dir).select("doc_id")),

@@ -208,9 +208,9 @@ def _make_zones_holes() -> dict:
     """Small {zone_id: verts-or-rings} set where zone 13 is a DONUT
     (its quad outer ring + a 0.4-scaled centered hole) — the
     multi-polygon-join analog of REGION_HOLES_RINGS. Exercises the
-    rings-aware JVM fast path of points_join_polygons: a point over
-    the lake must not match zone 13 but may match overlapping
-    neighbors."""
+    codegen path of points_join_polygons with two ring columns (2
+    rings x 4 vertices, inside the codegen budget): a point over the
+    lake must not match zone 13 but may match overlapping neighbors."""
     outer = ZONES[13]["verts"]
     cx = (outer[0][0] + outer[1][0] + outer[2][0] + outer[3][0]) / 4.0
     cy = (outer[0][1] + outer[1][1] + outer[2][1] + outer[3][1]) / 4.0

@@ -78,7 +78,12 @@ def grid_cell_id(lon: Column, lat: Column) -> Column:
 
 def join_cell_id(lon: Column, lat: Column) -> Column:
     """Fine-grained spatial-join prefilter cell (JOIN_GRID_N^2 over the
-    bbox, internal — not oracle-facing)."""
+    bbox, internal — not oracle-facing). Clamped to the grid: a point
+    outside the bbox (or with a NaN coordinate, which floors to 0)
+    keys to a border cell whose IN/OUT class says nothing about it, so
+    the candidate map classes every border cell such a point of a
+    polygon can land on as BOUNDARY for that polygon, and the exact
+    test decides (kernels.cells.clamped_border_cells)."""
     from ..constants import JOIN_GRID_INV_X, JOIN_GRID_INV_Y, JOIN_GRID_N
 
     cx = F.floor((lon - F.lit(XMIN)) * F.lit(JOIN_GRID_INV_X))
@@ -179,51 +184,23 @@ def pip_literal_col(lon: Column, lat: Column, verts) -> Column:
 
 
 def pip_array_col(
-    lon: Column, lat: Column, xs: Column, ys: Column, max_verts: int
+    lon: Column, lat: Column, rings: list[tuple[Column, Column]],
+    max_verts: int,
 ) -> Column:
     """Even-odd PIP where each row carries its own polygon as vertex
-    ARRAY columns (open rings, length <= max_verts) — the crossing
-    test UNROLLED to max_verts whole-stage-codegen edge terms (a
-    higher-order aggregate would leave codegen and run ~2x slower
-    than the pandas UDF it replaces). Edges past the ring length
-    contribute 0 via the i < n guard; F.get's null on short arrays
-    makes the when() condition false rather than erroring under ANSI.
-    Same per-edge expression tree as kernels.pip."""
-    n = F.size(xs)
+    ARRAY columns: one (xs, ys) pair of array<double> columns per ring
+    index (open rings, length <= max_verts; outer first, then holes).
+    The crossing test is UNROLLED to len(rings) x max_verts
+    whole-stage-codegen edge terms (a higher-order aggregate would
+    leave codegen and run ~2x slower than the pandas UDF it replaces).
+    Parity over ALL rings' edges gives donut semantics (a point inside
+    a hole crosses outer odd + hole odd = even -> outside). Edges past
+    a ring's length contribute 0 via the i < n guard, and a null ring
+    (a row with fewer rings) contributes 0 too: F.get's null makes the
+    when() condition null rather than erroring under ANSI. Same
+    per-edge expression tree as kernels.pip."""
     total = F.lit(0)
-    for i in range(max_verts):
-        x1 = F.get(xs, F.lit(i))
-        y1 = F.get(ys, F.lit(i))
-        j = (F.lit(i) + 1) % n
-        x2 = F.get(xs, j)
-        y2 = F.get(ys, j)
-        cross = (
-            (F.lit(i) < n)
-            & (y1 != y2)
-            & ((y1 > lat) != (y2 > lat))
-            & (lon < (x2 - x1) * (lat - y1) / (y2 - y1) + x1)
-        )
-        total = total + F.when(cross, 1).otherwise(0)
-    return total % 2 == 1
-
-
-def pip_rings_array_col(
-    lon: Column, lat: Column, rxs: Column, rys: Column,
-    max_rings: int, max_verts: int,
-) -> Column:
-    """Even-odd PIP where each row carries its own polygon as RING-LIST
-    array columns (array<array<double>>, open rings, outer + holes) —
-    donut zones in the multi-polygon join without leaving whole-stage
-    codegen. Parity over ALL rings' edges (a point inside a hole
-    crosses outer odd + hole odd = even -> outside), unrolled to
-    max_rings x max_verts edge terms; rings past the list length and
-    edges past a ring's length contribute 0 via null-propagating
-    guards (F.get null + when() => false, same contract as
-    pip_array_col). Same per-edge expression tree as kernels.pip."""
-    total = F.lit(0)
-    for r in range(max_rings):
-        xs = F.get(rxs, F.lit(r))
-        ys = F.get(rys, F.lit(r))
+    for xs, ys in rings:
         n = F.size(xs)
         for i in range(max_verts):
             x1 = F.get(xs, F.lit(i))

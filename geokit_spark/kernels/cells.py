@@ -16,6 +16,8 @@ cell and the cell-center PIP decides for every point in it.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from ..constants import GRID_N, XMIN, XSPAN, YMIN, YSPAN
@@ -48,12 +50,41 @@ def poly_bbox(verts) -> tuple[float, float, float, float]:
     return min(xs), min(ys), max(xs), max(ys)
 
 
+def clamped_border_cells(verts, grid_n: int = GRID_N) -> list[int]:
+    """Cell ids (cx * grid_n + cy) of the border cells that points of
+    the polygon lying OUTSIDE the bbox key to, since a point's cell
+    index is clamped into the grid (functions.geo.join_cell_id). Such
+    a point's class can't be read off the cell, so these cells must be
+    BOUNDARY for the polygon. Empty when the polygon's envelope (OUTER
+    ring bbox, inflated by _EPS) keeps inside the grid. Flooring and
+    clamping are monotone, so the cells lie in the polygon's clamped
+    envelope range and on the grid border."""
+    inv_x = grid_n / XSPAN
+    inv_y = grid_n / YSPAN
+    bx0, by0, bx1, by1 = poly_bbox(as_rings(verts)[0])
+    fx0 = math.floor((bx0 - _EPS - XMIN) * inv_x)
+    fx1 = math.floor((bx1 + _EPS - XMIN) * inv_x)
+    fy0 = math.floor((by0 - _EPS - YMIN) * inv_y)
+    fy1 = math.floor((by1 + _EPS - YMIN) * inv_y)
+    if min(fx0, fy0) >= 0 and max(fx1, fy1) < grid_n:
+        return []
+
+    def clamp(c):
+        return min(max(c, 0), grid_n - 1)
+
+    edge = (0, grid_n - 1)
+    return [
+        cx * grid_n + cy
+        for cx in range(clamp(fx0), clamp(fx1) + 1)
+        for cy in range(clamp(fy0), clamp(fy1) + 1)
+        if cx in edge or cy in edge
+    ]
+
+
 def covering_cells(verts, pad: int = 0, grid_n: int = GRID_N) -> list[tuple[int, int]]:
     """Grid cells (grid_n x grid_n over the bbox) covering a polygon's
     envelope — the engine's spatial-join prefilter key set (the analog
     of the reference's bbox SetSpatialFilter, vector.py:144-160)."""
-    import math
-
     inv_x = grid_n / XSPAN
     inv_y = grid_n / YSPAN
     bx0, by0, bx1, by1 = poly_bbox(verts)

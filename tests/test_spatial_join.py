@@ -3,12 +3,12 @@ brute-force numpy oracle (same kernels, no cell shortcut)."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
+import pytest
 
 from geokit_spark import fixtures
 from geokit_spark.constants import JOIN_GRID_N, XMIN, XSPAN, YMIN, YSPAN
 from geokit_spark.kernels.geocode import geocode
-from geokit_spark.kernels.pip import points_in_poly
+from geokit_spark.kernels.pip import as_rings, points_in_poly, points_in_poly_rings
 from geokit_spark.operators import spatial_join
 
 
@@ -92,10 +92,47 @@ def test_general_api_custom_polygon_set(spark, docs):
     assert set(map(tuple, got.values.tolist())) == expected
 
 
+def _python_nodes(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines() if "EvalPython" in ln or "MapInArrow" in ln]
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Lines of the plan-tree node at lines[i] and all its children."""
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    end = i + 1
+    while end < len(lines) and depth(lines[end]) > depth(lines[i]):
+        end += 1
+    return lines[i:end]
+
+
+def _executed_plan(df) -> str:
+    df.collect()  # AQE finalizes THIS Dataset's plan only on execution
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_zone_join_is_broadcast(spark, docs):
-    plan = spatial_join.docs_join_zones(spark, docs)._jdf.queryExecution().executedPlan().toString()
+    """Plan pins: the flat-zone join and a <=12-edge single polygon run
+    with no Python node; the region semi-join (24 edges, Arrow-UDF
+    path) keeps its UDF ABOVE the broadcast join, so only the boundary
+    band crosses into Python (the asNondeterministic fence)."""
+    plan = _executed_plan(spatial_join.docs_join_zones(spark, docs))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    assert not _python_nodes(plan)
+
+    quad = spatial_join.docs_in_polygon(spark, docs, fixtures.ZONES[0]["verts"])
+    plan = _executed_plan(quad)
+    assert "BroadcastHashJoin" in plan
+    assert not _python_nodes(plan)
+
+    lines = _executed_plan(spatial_join.docs_in_region(spark, docs)).splitlines()
+    udf_at = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    assert udf_at
+    for i in udf_at:
+        assert any("BroadcastHashJoin" in ln for ln in _subtree(lines, i))
 
 
 def test_entry_smoke(spark):
@@ -166,8 +203,8 @@ def test_points_join_polygons_with_donut_zone(spark, docs):
 
 def test_zones_holes_jvm_fast_path_plan_and_parity(spark):
     """Donut zones within the codegen budget run with NO Python stage
-    (the round-4 silent degradation is closed), and the rings-JVM
-    result equals the Arrow-UDF fallback row-for-row."""
+    (the round-4 silent degradation is closed), and the codegen
+    result equals the Arrow-UDF path row-for-row."""
     from pyspark.sql import functions as F
 
     from geokit_spark import fixtures
@@ -221,7 +258,7 @@ def test_zones_holes_oversized_rings_fall_back_to_udf(spark):
     from geokit_spark.functions.geo import with_geocode
     from geokit_spark.operators.spatial_join import points_join_polygons
 
-    # 8-vertex outer + 8-vertex hole: 2 x 8 = 16 terms > 12
+    # 20-vertex outer + 8-vertex hole: 2 x 20 = 40 terms > 12
     outer = fixtures.REGION_HOLES_RINGS[0]
     hole = fixtures.REGION_HOLES_RINGS[1]
     assert len(outer) > 4
@@ -246,12 +283,11 @@ def test_candidate_broadcast_size_pinned():
     under 8k (a 512^2 grid gave 265,110 and 115,135)."""
     from geokit_spark.operators.spatial_join import (
         _poly_candidates_pdf,
-        _polygon_cells_pdf,
         zones_dict,
     )
 
     assert len(_poly_candidates_pdf(zones_dict())) <= 20_000
-    assert len(_polygon_cells_pdf(fixtures.REGION_VERTS)) <= 8_000
+    assert len(_poly_candidates_pdf({0: fixtures.REGION_VERTS})) <= 8_000
 
 
 def _grid_line_probes():
@@ -270,22 +306,39 @@ def _grid_line_probes():
     return np.arange(len(lon), dtype=np.int64), lon, lat
 
 
+def _frac(fx, fy):
+    """Point at bbox fractions (fx, fy); outside the bbox past [0, 1]."""
+    return (XMIN + fx * XSPAN, YMIN + fy * YSPAN)
+
+
+def _at(i, j):
+    """Corner (i, j) of the JOIN_GRID_N grid."""
+    return _frac(i / JOIN_GRID_N, j / JOIN_GRID_N)
+
+
 def _grid_aligned_polys():
     """Polygons whose edges run along grid lines or through grid
     corners, so probes sit on a cell border AND a polygon edge."""
-
-    def at(i, j):
-        return (XMIN + i / JOIN_GRID_N * XSPAN, YMIN + j / JOIN_GRID_N * YSPAN)
-
     return {
-        1: [at(10, 20), at(50, 20), at(50, 70), at(10, 70)],
-        2: [at(90, 40), at(110, 60), at(90, 80), at(70, 60)],
+        1: [_at(10, 20), _at(50, 20), _at(50, 70), _at(10, 70)],
+        2: [_at(90, 40), _at(110, 60), _at(90, 80), _at(70, 60)],
     }
 
 
+def _small_donut():
+    """Quad outer ring + diamond hole through grid corners: 2 rings x 4
+    vertices, inside the codegen budget."""
+    return [
+        [_at(20, 20), _at(60, 20), _at(60, 60), _at(20, 60)],
+        [_at(40, 30), _at(50, 40), _at(40, 50), _at(30, 40)],
+    ]
+
+
 def test_grid_line_probes_match_brute_force(spark):
-    """Zones joins (JVM exact test) and the region semi-join (Arrow-UDF
-    exact test) agree with the numpy kernel on every grid-line probe."""
+    """Zones joins and single-polygon semi-joins agree with the numpy
+    kernel on every grid-line probe, on both exact-test paths: the
+    codegen path (fixture zones, grid-aligned quad, small donut) and
+    the Arrow-UDF path (24-vertex region)."""
     ids, lon, lat = _grid_line_probes()
     probes = spark.createDataFrame(
         pd.DataFrame({"doc_id": ids, "lon": lon, "lat": lat})
@@ -304,8 +357,85 @@ def test_grid_line_probes_match_brute_force(spark):
         assert len(pairs) == len(set(pairs))
         assert set(pairs) == expected
 
-    got = spatial_join.points_in_polygon(spark, probes, fixtures.REGION_VERTS)
-    have = [r["doc_id"] for r in got.select("doc_id").collect()]
-    expected = ids[points_in_poly(lon, lat, fixtures.REGION_VERTS)]
-    assert len(have) == len(expected)
-    assert set(have) == set(expected.tolist())
+    for verts in (
+        _grid_aligned_polys()[1], _small_donut(), fixtures.REGION_VERTS,
+    ):
+        got = spatial_join.points_in_polygon(spark, probes, verts)
+        assert got.columns == ["cell_id", "doc_id", "lon", "lat"]
+        have = [r["doc_id"] for r in got.select("doc_id").collect()]
+        expected = ids[points_in_poly_rings(lon, lat, as_rings(verts))]
+        assert len(have) == len(expected)
+        assert set(have) == set(expected.tolist())
+
+
+def _off_bbox_polys():
+    """Polygons reaching past (or lying wholly outside) the join grid's
+    bbox, one per exact-test path and clamp failure mode."""
+    circle = [
+        _frac(1.0 + 0.1 * np.cos(2 * np.pi * k / 16),
+              0.5 + 0.1 * np.sin(2 * np.pi * k / 16))
+        for k in range(16)
+    ]
+    return {
+        # east half of the bbox plus 5% beyond it: its clamped border
+        # cells are IN, so outside points used to pass untested
+        1: [_frac(0.5, -0.05), _frac(1.05, -0.05),
+            _frac(1.05, 1.05), _frac(0.5, 1.05)],
+        # apex pokes into the bbox: its clamped border cells are OUT,
+        # so true matches below the bbox used to be lost
+        2: [_frac(0.2, -0.3), _frac(0.4, -0.3), _frac(0.3, 0.05)],
+        # wholly outside the bbox: no covering cell of its own; its
+        # points clamp into east border cells
+        3: [_frac(1.2, 0.4), _frac(1.4, 0.4), _frac(1.4, 0.6), _frac(1.2, 0.6)],
+        # 16 vertices: the Arrow-UDF path
+        4: circle,
+        # the bbox's south-west corner cell is IN: a NaN point used to
+        # key there and pass untested
+        5: [_frac(-0.1, -0.1), _frac(0.1, -0.1), _frac(0.1, 0.1), _frac(-0.1, 0.1)],
+    }
+
+
+def test_points_outside_bbox_get_exact_answers(spark):
+    """Points outside the join grid's bbox reach the exact test instead
+    of inheriting a clamped border cell's class."""
+    fx = [3.0, 2.1, 1.02, 1.08, 1.15, 0.22, 1.3, 1.5, 0.75, -0.5, 0.3,
+          -0.05, np.nan]
+    fy = [0.5, 0.5, 0.5, 0.45, 0.5, -0.28, 0.5, 0.5, 0.5, 0.5, -0.01,
+          -0.05, np.nan]
+    lon, lat = np.array([_frac(x, y) for x, y in zip(fx, fy)]).T
+    ids = np.arange(len(lon), dtype=np.int64)
+    # from tuples: a pandas frame would turn NaN into null on the way in
+    probes = spark.createDataFrame(
+        [(int(d), float(x), float(y)) for d, x, y in zip(ids, lon, lat)],
+        "doc_id long, lon double, lat double",
+    )
+    polys = _off_bbox_polys()
+    expected = {
+        pid: set(ids[points_in_poly(lon, lat, verts)].tolist())
+        for pid, verts in polys.items()
+    }
+    assert all(expected.values())  # every polygon holds a probe
+    got = spatial_join.points_join_polygons(spark, probes, polys).select(
+        "doc_id", "zone_id"
+    )
+    pairs = [tuple(r) for r in got.collect()]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == {(d, pid) for pid, ds in expected.items() for d in ds}
+    for pid, verts in polys.items():
+        semi = spatial_join.points_in_polygon(spark, probes, verts)
+        assert {r["doc_id"] for r in semi.collect()} == expected[pid], pid
+
+
+def test_points_join_polygons_rejects_bad_input(spark):
+    probes = spark.createDataFrame(
+        [(1, XMIN, YMIN)], "doc_id long, lon double, lat double"
+    )
+    with pytest.raises(ValueError, match="polys is empty"):
+        spatial_join.points_join_polygons(spark, probes, {})
+    # the output's zone_id would be ambiguous, and points_in_polygon
+    # would drop the caller's column with its own
+    with pytest.raises(ValueError, match="already has a zone_id"):
+        spatial_join.points_in_polygon(
+            spark, probes.withColumn("zone_id", probes.doc_id),
+            fixtures.ZONES[0]["verts"],
+        )

@@ -19,8 +19,9 @@ Semantics provided (the subset a resumable 100-TB ingest needs):
   ``commit_key``; retrying a failed/timed-out commit with the same
   key is a no-op returning the already-committed version. This is
   the metadata-side half of the north rule's "resumes idempotently"
-  (the data-side half is plans/lineage.py's per-partition checksum
-  records).
+  (the data-side half is plans/lineage.py's CheckpointTable, which
+  commits each stage attempt by the same publish-by-rename, with its
+  per-cell checksum records as the renamed metadata).
 
 Commit protocol: data parquet is written to an immutable per-commit
 directory, then the manifest ``v{N}.json`` is written to a temp name

@@ -42,7 +42,7 @@ def main():
     ck = CheckpointTable(spark, args.checkpoint)
     cells, rows = ck.run_stage("zone_pairs", pairs, cell_col="cell_id")
     counts = (
-        spark.read.parquet(os.path.join(args.checkpoint, "zone_pairs"))
+        ck.data("zone_pairs")
         .groupBy("zone_id")
         .agg(F.count("*").alias("n_docs"))
     )

@@ -168,6 +168,45 @@ def test_pagerank_edge_cache_handle(spark):
     assert got == _py_pagerank(edges, list(range(3)), iters=2)
 
 
+def test_pagerank_round_join_reads_cached_edges_unshuffled(spark):
+    """Plan pin: the persisted edge frame is hash(src_id)-partitioned,
+    so each round's join with the inflow (hash(p_dst)) reads it with
+    no Exchange in between."""
+    edges = [(i % 50, (i * 7 + 3) % 50) for i in range(400)]
+    e = spark.createDataFrame(edges, ["src_id", "dst_id"])
+    n = spark.createDataFrame([(v,) for v in range(50)], ["doc_id"])
+    sc = pagerank(e, n, iters=3)
+    sc.collect()
+    # the final adaptive plan: the initial one plans an Exchange before
+    # the cache exists to report its partitioning
+    final = sc._jdf.queryExecution().executedPlan().executedPlan()
+    lines = final.toString().splitlines()
+
+    def col(line):  # column where the node's text starts
+        return len(line) - len(line.lstrip(" :+-"))
+
+    joins = [
+        i for i, line in enumerate(lines)
+        if "ShuffledHashJoin [src_id" in line and "[p_dst" in line
+    ]
+    assert joins  # iters=3: rounds 2 and 3 join
+    for i in joins:
+        c = col(lines[i])
+        streamed = [lines[i + 1]]  # the join's first child: the edges
+        for line in lines[i + 2:]:
+            if col(line) <= c or (col(line) == c + 3 and line[c] == "+"):
+                break
+            streamed.append(line)
+        # the cached frame's own plan below InMemoryRelation is not the
+        # path from the cache to the join
+        cut = next(
+            k for k, line in enumerate(streamed) if "InMemoryRelation" in line
+        )
+        path = streamed[:cut]
+        assert any("InMemoryTableScan" in line for line in path), path
+        assert not any("Exchange" in line for line in path), path
+
+
 def test_filter_blocked_domains_broadcast_anti(spark):
     """Blocked domains vanish (across case/port/www url variants) and
     the plan is a broadcast anti join — the page side never shuffles."""

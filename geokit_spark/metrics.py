@@ -19,6 +19,11 @@ otherwise, so importing this module never makes a bench run fail.
 The SQL-metric totals are parsed from the UI's human-formatted strings
 ("807.1 KiB (...)") — a <=0.1 % rounding error, irrelevant for the
 bandwidth-evidence use (is the stage moving ~GB/s or ~MB/s?).
+
+``codegen_compiles(spark)`` reads the JVM-wide count of generated
+classes compiled so far (Spark's ``CodegenMetrics``, also with the UI
+off); the difference of two reads is the compiles of the work between
+them, so a cache hit shows as 0.
 """
 
 from __future__ import annotations
@@ -158,3 +163,15 @@ def moved_bytes(d: dict) -> int:
         + d["py_sent"]
         + d["py_returned"]
     )
+
+
+def codegen_compiles(spark) -> int | None:
+    """Generated classes compiled by this JVM since it started (cache
+    hits do not count); None when the counter cannot be read, so a
+    caller degrades to "unavailable" instead of failing."""
+    try:
+        jvm = spark.sparkContext._jvm
+        codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(codegen.METRIC_COMPILATION_TIME().getCount())
+    except Exception:
+        return None

@@ -102,14 +102,13 @@ def pip_multi_udf(polys: dict):
             out[m] = points_in_poly_rings(px[m], py[m], pdict[int(z)])
         return pd.Series(out)
 
-    # nondeterministic marking is a PLAN fence, not a semantics change
-    # (the test is a pure function): the optimizer may not merge the
-    # filter UDF with the cell_class prefilter or push it toward the
-    # scan, so only the boundary band crosses into Python. A UDF over
-    # lon/lat alone went BELOW the broadcast join without it (measured
-    # at 80M rows: 1.24 GB py_sent, 2.9 s -> 1.5 s with the fence; band
-    # = 0.58% of rows); the zone_id argument now also holds it above.
-    return _udf.asNondeterministic()
+    # The filter stays above the broadcast join, so only boundary-band
+    # rows cross into Python, because its zone_id argument comes from
+    # the broadcast side: a predicate over both sides' columns cannot be
+    # pushed below the join (the cell_class prefilter, over broadcast
+    # columns alone, is folded into that side). A UDF over lon/lat
+    # alone would be pushed below it, onto every point.
+    return _udf
 
 
 _CELL_CACHE: dict[tuple, pd.DataFrame] = {}

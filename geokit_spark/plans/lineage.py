@@ -88,6 +88,10 @@ def lineage_rows(df: DataFrame, stage: str, cell_col: str = "cell_id") -> DataFr
             "cell_id",
             "row_count",
             "checksum",
+            # the optimizer folds current_timestamp() into a literal of
+            # this call's time, which codegen inlines: every call
+            # compiles its own 2 classes, past the class cache. Kept,
+            # because completed_at is in the FIXTURES.md §9 schema.
             F.current_timestamp().alias("completed_at"),
         )
     )
@@ -171,12 +175,13 @@ class CheckpointTable:
         os.rename(staged, os.path.join(self.lineage_path, attempt))
         return committed.get["cells"], committed.get["rows"]
 
-    def verify_stage(self, stage: str) -> DataFrame:
+    def verify_stage(self, stage: str, cell_col: str = "cell_id") -> DataFrame:
         """Recompute checksums from the stored data and compare with
         the lineage rows: (cell_id, ok). Detects partial/corrupt
-        writes before trusting a resume."""
+        writes before trusting a resume. `cell_col` is the one the
+        stage was run with."""
         attempts, _ = self._attempts(stage)
-        fresh = lineage_rows(self.data(stage), stage).select(
+        fresh = lineage_rows(self.data(stage), stage, cell_col).select(
             "cell_id",
             F.col("row_count").alias("rc2"),
             F.col("checksum").alias("ck2"),

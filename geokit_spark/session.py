@@ -71,6 +71,20 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEM", default_mem),
         )
         .config("spark.ui.enabled", "false")
+        # Compiled generated classes live in one JVM-wide LRU keyed by
+        # the generated source text. At Spark's default of 100 entries
+        # the cache cycles and never hits, because one pass generates
+        # more distinct classes than that: geo_join-tile_store 121-131,
+        # crawl_funnel-ann_topk 102, both in one JVM 225. Every warm
+        # pass then recompiled its classes (114-118 Janino compiles per
+        # warm geo pass, 53-62 per warm crawl pass; 2 and 0 with room).
+        # The 140-query oracle run compiles 1540 distinct classes, nearly
+        # all used once: with 1024 entries it compiles 1558. A geo-pass
+        # entry holds 7.7 KB of source (the key, mean) and 5.6 KB of
+        # bytecode (2.1 class files of 2.6 KB), so 1024 entries hold
+        # about 14 MB. Only bytecode is reused, and only for identical
+        # source: no data or result.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -32,10 +32,14 @@ def spark_jobs(spark):
 
     The block runs under a job group of its own; on exit the yielded
     record holds ``jobs``, the number of jobs in that group
-    (SparkStatusTracker), and ``plans``, the physical plan text of each
-    SQL execution started inside the block (the SQL status store). Both
-    work with the UI off.
+    (SparkStatusTracker), ``plans``, the physical plan text of each
+    SQL execution started inside the block (the SQL status store), and
+    ``compiles``, the generated classes the JVM compiled meanwhile
+    (``metrics.codegen_compiles``; None if unreadable). All work with
+    the UI off.
     """
+    from geokit_spark.metrics import codegen_compiles
+
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
@@ -49,9 +53,10 @@ def spark_jobs(spark):
 
     @contextmanager
     def counted():
-        work = SimpleNamespace(jobs=0, plans=[])
+        work = SimpleNamespace(jobs=0, plans=[], compiles=None)
         group = f"counted-{uuid.uuid4().hex}"
         before = last_execution()
+        compiled = codegen_compiles(spark)
         sc.setJobGroup(group, group)
         try:
             yield work
@@ -59,6 +64,9 @@ def spark_jobs(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
             k = last_execution() - before
+            now = codegen_compiles(spark)
+            if compiled is not None and now is not None:
+                work.compiles = now - compiled
             work.jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             n = store.executionsCount()
             tail = store.executionsList(max(n - k, 0), k)

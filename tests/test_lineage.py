@@ -133,6 +133,15 @@ def test_uncommitted_attempt_invisible_then_reaped(spark, ckpt_dir):
     assert ck.verify_stage("s").toPandas()["ok"].all()
 
 
+def test_verify_stage_other_cell_column(spark, ckpt_dir):
+    """A stage run over another cell column verifies over that column."""
+    work = _ten_cells(spark).withColumnRenamed("cell_id", "zone")
+    ck = CheckpointTable(spark, ckpt_dir)
+    assert ck.run_stage("z", work, cell_col="zone") == (10, 1000)
+    ok = ck.verify_stage("z", cell_col="zone").toPandas()
+    assert sorted(ok["cell_id"]) == list(range(10)) and ok["ok"].all()
+
+
 def test_stage_jobs_and_no_sort_merge_join(spark, docs, ckpt_dir, spark_jobs):
     """First call, no-op resume and verify: a bounded number of jobs and
     no SortMergeJoin (the completed-cell side is broadcast)."""

@@ -56,6 +56,16 @@ def test_bytecounter_unavailable_without_ui():
     assert not s["available"] and s["shuffle_write"] == 0
 
 
+def test_codegen_compiles_unavailable_without_jvm():
+    class FakeSC:
+        _jvm = None
+
+    class FakeSpark:
+        sparkContext = FakeSC()
+
+    assert metrics.codegen_compiles(FakeSpark()) is None
+
+
 def test_aspect_octant_case_boundaries():
     """Octant conventions pinned on hand vectors via DuckDB (the CASE
     text is shared verbatim between Spark and the oracle, so one

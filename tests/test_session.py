@@ -25,7 +25,8 @@ def test_heap_default_fits_the_host(cores, mem_kb, want):
 
 def test_get_spark_default_uses_the_clamp(monkeypatch):
     """get_spark's default heap comes from MemTotal (mocked small) and
-    SPARK_DRIVER_MEM still overrides it."""
+    SPARK_DRIVER_MEM still overrides it; the codegen class cache is
+    sized past the benchmark's 225 classes and extra= overrides it."""
     seen = {}
 
     class _Builder:
@@ -56,3 +57,11 @@ def test_get_spark_default_uses_the_clamp(monkeypatch):
     except RuntimeError:
         pass
     assert seen["spark.driver.memory"] == "3g"
+    assert seen["spark.sql.codegen.cache.maxEntries"] == "1024"
+    try:
+        session.get_spark(
+            cores=4, extra={"spark.sql.codegen.cache.maxEntries": "64"}
+        )
+    except RuntimeError:
+        pass
+    assert seen["spark.sql.codegen.cache.maxEntries"] == "64"

@@ -117,7 +117,7 @@ def test_zone_join_is_broadcast(spark, docs):
     """Plan pins: the flat-zone join and a <=12-edge single polygon run
     with no Python node; the region semi-join (24 edges, Arrow-UDF
     path) keeps its UDF ABOVE the broadcast join, so only the boundary
-    band crosses into Python (the asNondeterministic fence)."""
+    band crosses into Python (its zone_id comes from the broadcast side)."""
     plan = _executed_plan(spatial_join.docs_join_zones(spark, docs))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
